@@ -529,12 +529,14 @@ object Bench {
       // queries 60%+ run-to-run
       System.gc()
       val (gc0, cpu0, t0) = (gcMsNow(), cpuNsNow(), System.nanoTime())
-      try { run() } catch { case _: Throwable => return Sample(-1.0, 0.0, 0.0) }
+      run()
       Sample((System.nanoTime() - t0) / 1e9,
         (gcMsNow() - gc0) / 1e3,
         if (cpu0 < 0) -1.0 else (cpuNsNow() - cpu0) / 1e9)
     }
-    def timeMedian(run: () => Unit): Sample = {
+    // A query that throws in any timed run FAILED: it gives no time (None),
+    // is left out of every total and is listed under "failed".
+    def timeMedian(run: () => Unit): Option[Sample] = try Some {
       val s1 = timeOnce(run)
       if (s1.sec < 0.4) s1
       else {
@@ -547,8 +549,8 @@ object Bench {
         if (three.last.sec <= three.head.sec * 1.4) three(1)
         else (three ++ Seq(timeOnce(run), timeOnce(run))).sortBy(_.sec).apply(2)
       }
-    }
-    val results = selected.flatMap { case (name, fn) =>
+    } catch { case _: Throwable => None }
+    val outcomes = selected.flatMap { case (name, fn) =>
       SparkEntry.benchPhases.get(name) match {
         // round-trip queries: time sink and source phases separately so
         // a format regression is attributable (the read phase always
@@ -561,9 +563,12 @@ object Bench {
       }
     }
     // Human-readable per-query table (full names + historical band +
-    // FLAG marker + the median run's own gc/cpu), slowest first. These
-    // lines scroll out of the harness's 2000-char output tail; only the
-    // compact JSON line below must survive in it.
+    // FLAG marker + the median run's own gc/cpu), slowest first, then
+    // the failed queries. These lines scroll out of the harness's
+    // 2000-char output tail; only the compact JSON line below must
+    // survive in it.
+    val results = outcomes.collect { case (k, Some(s)) => k -> s }
+    val failedNames = outcomes.collect { case (k, None) => k }.toSeq.sorted
     results.toSeq.sortBy(-_._2.sec).foreach { case (k, s) =>
       val short = k.takeWhile(_ != '_')
       val band = Bands.get(short) match {
@@ -573,6 +578,7 @@ object Bench {
       }
       println(f"BENCH $k%-28s ${s.sec}%9.3f s gc=${s.gcSec}%6.3f cpu=${s.cpuSec}%7.2f$band")
     }
+    failedNames.foreach(k => println(f"BENCH $k%-28s    FAILED"))
     val total = if (results.nonEmpty) results.values.map(_.sec).sum else 0.0
     // Compact final JSON: the harness captures only the LAST 2000 chars of
     // output and json-parses the line — 75 full-name entries (~2950 chars)
@@ -597,6 +603,8 @@ object Bench {
       }.sortBy { case (_, s, hi) => -(s.sec / hi) }.take(6)
     val flagged = flaggedSeq
       .map { case (q, s, hi) => s"""["$q",${r3(s.sec)},${r3(hi)}]""" }
+      .mkString("[", ",", "]")
+    val failed = failedNames.map(k => "\"" + k.takeWhile(_ != '_') + "\"")
       .mkString("[", ",", "]")
     // Per-flagged-query attribution: the median run's own GC seconds and
     // cpu-seconds. A flagged entry whose gc is a large fraction of its
@@ -626,7 +634,8 @@ object Bench {
     // tail rather than the line's parseability.
     def lineWith(qs: String, extra: String): String =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec",""" +
-        s""""queries":$qs,$extra"flagged":$flagged,"flag_env":$fenv,""" +
+        s""""queries":$qs,$extra"flagged":$flagged,"failed":$failed,""" +
+        s""""flag_env":$fenv,""" +
         s""""env":$env,"sf":"$sfDir"}"""
     val fullQs = qEntries.map(_._1).mkString("{", ",", "}")
     // a FILTERED run (SPARK_GRAFT_ONLY set — builder-local profiling)

@@ -1230,7 +1230,8 @@ object SparkEntry {
     // 100 TB. Recall contract is the composition's, slightly looser
     // than either alone; the near-isotropic fixtures (PQ's hard regime)
     // need a generous shortlist, where clustered real corpora prune far
-    // harder — verified TRUE at every fixture SF via QCheck.
+    // harder — verified TRUE at every fixture SF (sf0.001, sf0.01,
+    // sf0.1) by running the query and reading its recall_ok row.
     "q84_ann_ivfpq" -> ((s, dir) => {
       import s.implicits._
       val ann = graft.operators.Ann

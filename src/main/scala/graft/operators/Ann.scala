@@ -60,12 +60,6 @@ object Ann {
     sig
   }
 
-  /** Signature column for one band. */
-  def signatureCol(vec: Column, planes: Int = 16, seed: Long = 42L): Column = {
-    val f = udf((v: Seq[Double]) => signature(v.toArray, planes, seed))
-    f(vec.cast("array<double>"))
-  }
-
   /** Array of `bands` independent signatures (for near-dup banding). */
   def bandedSignatures(vec: Column, planesPerBand: Int, bands: Int, seed: Long): Column = {
     val f = udf((v: Seq[Double]) => {

@@ -148,11 +148,6 @@ object Dedup {
     f(text)
   }
 
-  def minhashCol(shingles: Column, numHashes: Int = 128, seed: Long = 42L): Column = {
-    val f = udf((s: Seq[Long]) => minhashSig(s.toArray, numHashes, seed))
-    f(shingles)
-  }
-
   /** One band hash per band, computed in a SINGLE UDF call: signature +
     * all band mixes in one pass. (An `array(bands x xxhash64(slice(udf..`
     * column would re-evaluate the signature UDF once per band — subexpr

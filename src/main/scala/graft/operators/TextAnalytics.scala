@@ -844,40 +844,4 @@ object TextAnalytics {
     * lowercased text (built-in xxhash64 — codegen'd). */
   def fingerprint(text: Column): Column =
     xxhash64(regexp_replace(lower(trim(text)), "\\s+", " "))
-
-  /** Winnowing fingerprint: min rolling k-gram hash per window of w —
-    * a compact array<long> sketch for near-dup overlap detection
-    * (standard winnowing scheme over character k-grams). */
-  def winnow(text: Column, k: Int = 8, w: Int = 16): Column = {
-    val f = udf((t: String) => winnowImpl(t, k, w))
-    f(text)
-  }
-
-  private[graft] def winnowImpl(text: String, k: Int, w: Int): Array[Long] = {
-    if (text == null) return Array.empty
-    val s = text.toLowerCase.replaceAll("\\s+", " ")
-    if (s.length < k) return if (s.isEmpty) Array.empty else Array(Dedup.splitmix64(s.hashCode.toLong))
-    val grams = new Array[Long](s.length - k + 1)
-    var i = 0
-    while (i + k <= s.length) {
-      var h = 1125899906842597L
-      var j = i
-      while (j < i + k) { h = h * 31 + s.charAt(j); j += 1 }
-      grams(i) = Dedup.splitmix64(h)
-      i += 1
-    }
-    if (grams.length <= w) Array(grams.min)
-    else {
-      val out = scala.collection.mutable.LinkedHashSet[Long]()
-      var start = 0
-      while (start + w <= grams.length) {
-        var m = Long.MaxValue
-        var j = start
-        while (j < start + w) { if (grams(j) < m) m = grams(j); j += 1 }
-        out += m
-        start += 1
-      }
-      out.toArray
-    }
-  }
 }

@@ -164,12 +164,16 @@ final class VectorIndex private (
       // ONE probe job answers both pre-write questions — the E2 dim
       // rejection (before any write) and the touched-bucket set (two
       // separate jobs here cost a fixed per-job overhead that dominates
-      // small ingest batches; measured 0.3s/upsert at sf0.1)
+      // small ingest batches; measured 0.3s/upsert at sf0.1). A null
+      // vector is flagged explicitly: size(null) is null, so the width
+      // comparison alone would pass it on to fail inside the write.
       val probe = incoming.groupBy(col("_bucket"))
-        .agg(max(when(size(col("values")) =!= dim, 1).otherwise(0)).as("_bad"))
+        .agg(max(when(col("values").isNull || size(col("values")) =!= dim, 1)
+          .otherwise(0)).as("_bad"))
         .collect()
       if (probe.exists(_.getInt(1) > 0))
-        throw new IngestError(s"upsert: embedding dimension != index dimension $dim")
+        throw new IngestError(
+          s"upsert: null embedding or embedding dimension != index dimension $dim")
       val touched = probe.map(_.getInt(0)).toSet
       val manifest = cur.map(readManifest(spark, path, _))
         .getOrElse(Map.empty[Int, Seq[ManifestFile]])
@@ -185,9 +189,8 @@ final class VectorIndex private (
       // of full vector rows.
       val w = Window.partitionBy(col("_bucket"), col("id"))
         .orderBy(col("version").desc, xxhash64(col("values")).desc)
-      // canonical-column select: stored files may carry the derived
-      // _bsig column (or not, for legacy files) — it is recomputed at
-      // write, never merged
+      // canonical-column select: the derived _bsig (and _vpre) columns
+      // are recomputed at write, never merged
       val base = if (oldFiles.isEmpty) incoming else {
         readSnapshotFiles(spark, path, cur.get, oldFiles, mergeSchema = false)
           .select(col("id"), col("values"), col("metadata"), col("version"))
@@ -219,10 +222,7 @@ final class VectorIndex private (
       asOf: Option[Long] = None): DataFrame = {
     val base0 = asOf.map(scanAt).getOrElse(scan())
     val base = filter.foldLeft(base0)((df, f) => df.filter(f))
-    base.withColumn("score", scoreCol(q))
-      .orderBy(col("score").desc, col("id"))
-      .limit(k)
-      .select(col("id"), col("score"), col("metadata"))
+    topScored(base.withColumn("score", scoreCol(q)), k)
   }
 
   /** The metric's score expression for query vector `q`. */
@@ -259,12 +259,6 @@ final class VectorIndex private (
     * of the buckets the shortlisted ids hash into (the same
     * static-prune discipline as every other probe).
     *
-    * Legacy tolerance: rows in files written before signatures existed
-    * surface a null `_bsig` and are ALWAYS exact-rescored, so results
-    * never silently depend on backfill progress (an index with no
-    * signatures at all degrades to the exact [[query]]); a rebucket is
-    * the natural full backfill.
-    *
     * Approximation contract, like every shortlist ANN ([[Ann
     * .queryBinary]] is this plan over a plain table): recall < 1 is
     * possible; `shortlist` >= index size recovers [[query]] exactly.
@@ -297,7 +291,7 @@ final class VectorIndex private (
     if (filter.isDefined) {
       var tries = 0
       // only an APPROX attempt can underfill recoverably: the exact-*
-      // fallbacks already scanned everything the filter allows.
+      // exits are already the filter's whole answer.
       // EXHAUSTION EXIT (r20): once the shortlist covers every row the
       // snapshot holds, the attempt already ranked and rescored the
       // whole index — the remaining underfill is the filter's true
@@ -305,8 +299,8 @@ final class VectorIndex private (
       // only repeat the same full-scan attempt. A row-count STALL is
       // NOT a valid exit: probed files grow with the shortlist target,
       // so a plateau at sl can precede growth at 2*sl (q125's very
-      // scenario). Unknown row counts (legacy manifests without the
-      // rows field) disable the exit rather than risk a false stop.
+      // scenario). Unknown row counts (manifests without the rows
+      // field) disable the exit rather than risk a false stop.
       val totalRows = snapshotRowCount(asOf)
       while (tries < maxEscalations && lastApproxMode.startsWith("approx") &&
           totalRows.forall(sl < _) && res.count() < k) {
@@ -328,98 +322,62 @@ final class VectorIndex private (
         Some(v)
       case None => currentSnapshot(spark, path)
     }
-    snap match {
-      case None =>
-        lastApproxMode = "exact-empty"
-        query(q, k, filter, asOf) // empty index: exact path's empty result
-      case Some(n) =>
-        val manifest = readManifest(spark, path, n)
-        val all = manifest.values.flatten.toSeq
-        // metadata-stats pruning FIRST: files whose recorded per-field
-        // [lo,hi]/null stats refute a supported filter conjunct can
-        // never contribute a match — dropping them both shrinks the
-        // probe I/O and stops the shortlist budget being spent on
-        // never-matching rows. Unknown stats never prune.
-        val preds = filter.map(extractStatPreds).getOrElse(Nil)
-        val usable = if (preds.isEmpty) all else all.filter(fileCanMatch(_, preds))
-        lastStatsPrunedFiles = all.size - usable.size
-        // every file refuted = the predicate is PROVABLY unsatisfiable
-        // in this snapshot (refutation is conservative): the empty
-        // answer is exact — return it without probing, rescoring, or
-        // falling back to a full scan
-        if (all.nonEmpty && usable.isEmpty) {
-          lastApproxMode = "exact-stats-refuted"
-          return emptyIndexDf(spark)
-            .select(col("id"), lit(0.0).as("score"), col("metadata"))
-        }
-        // cell-pruned probe: read only the files of the query cell's
-        // expanding Hamming neighborhoods (plus every no-cell file),
-        // sized by the manifest's per-file row counts — NOT the whole
-        // index's (id,_bsig) pairs. The bits come from the committed
-        // manifest's meta header (the layout is part of the commit).
-        val bits = manifestMeta(spark, path, n).map(_.sigCellBits)
-          .getOrElse(meta.sigCellBits)
-        val qsig = Ann.bitSignature64(q.map(_.toDouble), SigSeed)
-        val files = selectProbeFiles(usable, bits, qsig, shortlist.toLong * ProbeOversample)
-        lastProbeFiles = files.size
-        lastManifestFiles = all.size
-        // a filter over only {id, metadata} is applied IN the signature
-        // phase (those columns are in every data file): the shortlist
-        // then ranks matching rows only, so a selective filter fills k
-        // without escalations instead of discovering the mismatches at
-        // rescore. Filters over other columns keep the rescore-filter +
-        // escalation contract.
-        val pushable = filter.filter(f =>
-          filterRoots(f).exists(_.subsetOf(Set("id", "metadata"))))
-        lastFilterPushed = pushable.isDefined
-        approxPhases(files, q, shortlist, pushable, Some(n)) match {
-          case None =>
-            lastApproxMode = "exact-nosig"
-            query(q, k, filter, asOf) // no signatures anywhere: exact
-          case Some(phase) =>
-            try {
-              // legacy rows bypass the signature phase and ALL join the
-              // rescore — correct, but a mostly-legacy index would push
-              // nearly every id through the driver-side broadcast. When
-              // legacy alone reaches the shortlist the approximation
-              // saves nothing over the exact scan: fall back to query(),
-              // whose single pass is strictly cheaper than shortlist +
-              // unbounded rescore (ADVICE r12; keeps the broadcast
-              // ~shortlist-sized by construction).
-              val legacyCount = phase.legacy.limit(shortlist).count()
-              if (legacyCount >= shortlist) {
-                lastApproxMode = "exact-legacy-dominated"
-                return query(q, k, filter, asOf)
-              }
-              lastApproxMode =
-                if (files.size < all.size) "approx-pruned" else "approx-full"
-              val nb = currentNumBuckets(Some(n))
-              val candIds = phase.ranked.unionByName(phase.legacy).distinct()
-                .localCheckpoint(true) // bucket-key collect + rescore join
-              val buckets = candIds
-                .select(pmod(xxhash64(col("id")), lit(nb)).cast("int").as("_b"))
-                .distinct().collect().map(_.getInt(0)).toSet
-              val bFiles = manifest.collect { case (b, fs) if buckets(b) => fs }
-                .flatten.filter(mf => preds.isEmpty || fileCanMatch(mf, preds))
-                .map(_.file).toSeq.sorted
-              val rows =
-                if (bFiles.isEmpty) emptyIndexDf(spark)
-                else readSnapshotFiles(spark, path, n, bFiles, mergeSchema = false)
-                  .select(col("id"), col("values"), col("metadata"))
-              val rescored = rows.join(broadcast(candIds), "id")
-              filter.foldLeft(rescored)((df, f) => df.filter(f))
-                .withColumn("score", scoreCol(q))
-                .orderBy(col("score").desc, col("id"))
-                .limit(k)
-                .select(col("id"), col("score"), col("metadata"))
-            } finally phase.sigs.unpersist(blocking = false)
-        }
+    val manifest = snap.map(readManifest(spark, path, _))
+      .getOrElse(Map.empty[Int, Seq[ManifestFile]])
+    val all = manifest.values.flatten.toSeq
+    if (all.isEmpty) {
+      lastApproxMode = "exact-empty"
+      return query(q, k, filter, asOf) // empty index: exact path's empty result
     }
+    val n = snap.get
+    // metadata-stats pruning FIRST: files whose recorded per-field
+    // [lo,hi]/null stats refute a supported filter conjunct can
+    // never contribute a match — dropping them both shrinks the
+    // probe I/O and stops the shortlist budget being spent on
+    // never-matching rows. Unknown stats never prune.
+    val preds = filter.map(extractStatPreds).getOrElse(Nil)
+    val usable = if (preds.isEmpty) all else all.filter(fileCanMatch(_, preds))
+    lastStatsPrunedFiles = all.size - usable.size
+    // every file refuted = the predicate is PROVABLY unsatisfiable
+    // in this snapshot (refutation is conservative): the empty
+    // answer is exact — return it without probing, rescoring, or
+    // falling back to a full scan
+    if (usable.isEmpty) {
+      lastApproxMode = "exact-stats-refuted"
+      return emptyIndexDf(spark)
+        .select(col("id"), lit(0.0).as("score"), col("metadata"))
+    }
+    // cell-pruned probe: read only the files of the query cell's
+    // expanding Hamming neighborhoods (plus every no-cell file),
+    // sized by the manifest's per-file row counts — NOT the whole
+    // index's (id,_bsig) pairs. The bits come from the committed
+    // manifest's meta header (the layout is part of the commit).
+    val bits = manifestMeta(spark, path, n).map(_.sigCellBits)
+      .getOrElse(meta.sigCellBits)
+    val qsig = Ann.bitSignature64(q.map(_.toDouble), SigSeed)
+    val files = selectProbeFiles(usable, bits, qsig, shortlist.toLong * ProbeOversample)
+    lastProbeFiles = files.size
+    lastManifestFiles = all.size
+    // a filter over only {id, metadata} is applied IN the signature
+    // phase (those columns are in every data file): the shortlist
+    // then ranks matching rows only, so a selective filter fills k
+    // without escalations instead of discovering the mismatches at
+    // rescore. Filters over other columns keep the rescore-filter +
+    // escalation contract.
+    val pushable = filter.filter(f =>
+      filterRoots(f).exists(_.subsetOf(Set("id", "metadata"))))
+    lastFilterPushed = pushable.isDefined
+    lastApproxMode =
+      if (files.size < all.size) "approx-pruned" else "approx-full"
+    // pinned: the shortlist feeds both the bucket-key collect and
+    // the rescore join
+    val candIds = approxPhases(files, q, shortlist, pushable, Some(n))
+      .select(col("id")).localCheckpoint(true)
+    topScored(rescore(n, candIds, q, filter), k)
   }
 
   /** Which path the last [[queryApprox]] took ("exact-empty",
-    * "exact-nosig", "exact-legacy-dominated", "approx-pruned",
-    * "approx-full") and how many manifest files its signature phase
+    * "exact-stats-refuted", "approx-pruned", "approx-full") and how many manifest files its signature phase
     * read vs the manifest total — diagnostics for specs and operators
     * (a serving deployment wants to SEE that pruning engages). */
   private[graft] var lastApproxMode: String = ""
@@ -457,13 +415,8 @@ final class VectorIndex private (
     * anyway, and B probes amortize the column-pruned pass they share.
     *
     * Contracts, matching the single-query probes: query dimensions are
-    * validated up front (the E2 discipline); legacy rows (null `_bsig`)
-    * join EVERY query's rescore, so results never depend on backfill
-    * progress; an index with no signature column at all — or whose
-    * legacy rows alone would fill the shortlist — falls back to the
-    * exact one-scan batch join ([[Ann.knnJoin]]'s shape over the
-    * snapshot); and `shortlist >= index size` provably recovers the
-    * per-query exact answer. Output: (query_id, rank 1..k, id, score),
+    * validated up front (the E2 discipline), and `shortlist >= index
+    * size` provably recovers the per-query exact answer. Output: (query_id, rank 1..k, id, score),
     * rank by (score desc, id) — deterministic under ties.
     *
     * FILTERED batch search keeps [[queryApprox]]'s three metadata
@@ -531,129 +484,97 @@ final class VectorIndex private (
       }
       val files = usableMf.values.flatten.map(_.file).toSeq.sorted
       if (files.isEmpty) { lastKnnMode = "exact-stats-refuted"; return emptyResult }
-      // mergeSchema: files may predate the _bsig column (schema served
-      // from the snapshot cache after the first read)
-      val rawAll = readSnapshotFiles(spark, path, snap.get, files,
-        mergeSchema = true)
       val wK = Window.partitionBy(col("_qid"))
         .orderBy(col("score").desc, col("id"))
       def topK(scored: DataFrame): DataFrame = scored
         .withColumn("_rn", row_number().over(wK)).filter(col("_rn") <= k)
         .select(col("_qid").as("query_id"), col("_rn").cast("int").as("rank"),
           col("id"), col("score"))
-      def exactBatch(): DataFrame = {
-        val base = filter.foldLeft(
-          rawAll.select(col("id"), col("values"), col("metadata")))(
-          (df, f) => df.filter(f))
-        topK(base.select(col("id"), col("values"))
-          .crossJoin(broadcast(qs))
-          .select(col("_qid"), col("id"),
-            scoreCols(col("values"), col("_qv")).as("score")))
-      }
-      if (!rawAll.columns.contains("_bsig")) {
-        lastKnnMode = "exact-nosig"
-        return exactBatch()
-      }
       // a filter over only {id, metadata} prunes INSIDE the signature
       // pass (those columns are in every data file); other filters keep
       // the rescore-filter + escalation contract
       val pushable = filter.filter(f =>
         filterRoots(f).exists(_.subsetOf(Set("id", "metadata"))))
-      val sigs = pushable.foldLeft(rawAll)((df, f) => df.filter(f))
+      val sigs = pushable.foldLeft(
+          readSnapshotFiles(spark, path, snap.get, files, mergeSchema = true))(
+          (df, f) => df.filter(f))
         .select(col("id"), col("_bsig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val legacyIds = sigs.filter(col("_bsig").isNull).select(col("id"))
-        // the queryApprox legacy-dominated fallback, batch edition: when
-        // legacy alone fills the shortlist the approximation saves
-        // nothing over one exact scan (and would broadcast an unbounded
-        // candidate set)
-        if (legacyIds.limit(shortlist).count() >= shortlist) {
-          lastKnnMode = "exact-legacy-dominated"
-          return exactBatch()
-        }
-        lastKnnMode = "approx"
-        val sigUdf = udf((v: Seq[Double]) =>
-          Ann.bitSignature64(v.toArray, SigSeed))
-        val qsigs = qs.withColumn("_qsig", sigUdf(col("_qv")))
-          .select(col("_qid"), col("_qsig"))
-        val nb = currentNumBuckets(snap)
-        def attempt(sl: Int): DataFrame = {
-          val wS = Window.partitionBy(col("_qid"))
-            .orderBy(col("_hd"), col("id"))
-          val shortPairs = sigs.filter(col("_bsig").isNotNull)
-            .crossJoin(broadcast(qsigs))
-            .select(col("_qid"), col("id"),
-              bit_count(col("_bsig").bitwiseXOR(col("_qsig"))).cast("int").as("_hd"))
-            .withColumn("_rn", row_number().over(wS))
-            .filter(col("_rn") <= sl)
-            .select(col("_qid"), col("id"))
-          // candidate pairs: bounded by B x sl + B x legacy (legacy <
-          // shortlist by the fallback above) — broadcastable by
+      lastKnnMode = "approx"
+      val sigUdf = udf((v: Seq[Double]) =>
+        Ann.bitSignature64(v.toArray, SigSeed))
+      val qsigs = qs.withColumn("_qsig", sigUdf(col("_qv")))
+        .select(col("_qid"), col("_qsig"))
+      val nb = currentNumBuckets(snap)
+      def attempt(sl: Int): DataFrame = {
+        val wS = Window.partitionBy(col("_qid"))
+          .orderBy(col("_hd"), col("id"))
+        val pairs = sigs.crossJoin(broadcast(qsigs))
+          .select(col("_qid"), col("id"),
+            bit_count(col("_bsig").bitwiseXOR(col("_qsig"))).cast("int").as("_hd"))
+          .withColumn("_rn", row_number().over(wS))
+          .filter(col("_rn") <= sl)
+          .select(col("_qid"), col("id"))
+          // candidate pairs: at most B x sl — broadcastable by
           // construction; pinned for the bucket-key collect + the join
-          val pairs = shortPairs
-            .unionByName(legacyIds.crossJoin(broadcast(qs.select(col("_qid")))))
-            .localCheckpoint(true)
-          val buckets = pairs
-            .select(pmod(xxhash64(col("id")), lit(nb)).cast("int").as("_b"))
-            .distinct().collect().map(_.getInt(0)).toSet
-          val bFiles = usableMf.collect { case (b, fs0) if buckets(b) => fs0 }
-            .flatten.map(_.file).toSeq.sorted
-          // a pushed filter can empty the shortlist AND the legacy set
-          // (e.g. an id predicate no row satisfies): zero candidate
-          // files is the provably-empty answer, not a zero-path scan
-          if (bFiles.isEmpty) return emptyResult
-          val rows = readSnapshotFiles(spark, path, snap.get, bFiles,
-              mergeSchema = false)
-            .select(col("id"), col("values"), col("metadata"))
-          val rescored = rows.join(broadcast(pairs), Seq("id"))
-          topK(filter.foldLeft(rescored)((df, f) => df.filter(f))
-            .join(broadcast(qs.select(col("_qid"), col("_qv"))), Seq("_qid"))
-            .select(col("_qid"), col("id"),
-              scoreCols(col("values"), col("_qv")).as("score")))
+          .localCheckpoint(true)
+        val buckets = pairs
+          .select(pmod(xxhash64(col("id")), lit(nb)).cast("int").as("_b"))
+          .distinct().collect().map(_.getInt(0)).toSet
+        val bFiles = usableMf.collect { case (b, fs0) if buckets(b) => fs0 }
+          .flatten.map(_.file).toSeq.sorted
+        // a pushed filter can empty the shortlist (e.g. an id predicate
+        // no row satisfies): zero candidate files is the provably-empty
+        // answer, not a zero-path scan
+        if (bFiles.isEmpty) return emptyResult
+        val rows = readSnapshotFiles(spark, path, snap.get, bFiles,
+            mergeSchema = false)
+          .select(col("id"), col("values"), col("metadata"))
+        val rescored = rows.join(broadcast(pairs), Seq("id"))
+        topK(filter.foldLeft(rescored)((df, f) => df.filter(f))
+          .join(broadcast(qs.select(col("_qid"), col("_qv"))), Seq("_qid"))
+          .select(col("_qid"), col("id"),
+            scoreCols(col("values"), col("_qv")).as("score")))
+      }
+      var sl = shortlist
+      var res = attempt(sl)
+      if (filter.isDefined) {
+        // escalate while any query underfills k: one k-bounded count
+        // per attempt (a filter too selective to ever fill k stops
+        // after the bounded retries with the true underfilled answer).
+        // EXHAUSTION EXIT (r20): once `sl` covers every signature row
+        // the snapshot holds, the attempt's per-query window already
+        // ranked EVERY row — the remaining underfill is the filter's
+        // true answer, and each further escalation would burn a full
+        // B x N signature window plus rescore to recompute it. Unknown
+        // row counts disable the exit rather than risk a false stop.
+        // The bound sums the PINNED manifest already in hand (the
+        // snapshot every attempt serves) — re-resolving the current
+        // snapshot here could see a concurrent shrink and fire a false
+        // exit against a larger pinned snapshot that escalation would
+        // still fill (r20 review).
+        var tries = 0
+        def underfilled(r: DataFrame): Boolean = {
+          val filled = r.groupBy(col("query_id")).count()
+            .filter(col("count") >= k).count()
+          filled < nQueries // qids verified distinct above
         }
-        var sl = shortlist
-        var res = attempt(sl)
-        if (filter.isDefined) {
-          // escalate while any query underfills k: one k-bounded count
-          // per attempt (a filter too selective to ever fill k stops
-          // after the bounded retries with the true underfilled answer).
-          // EXHAUSTION EXIT (r20): once `sl` covers every signature row
-          // the snapshot holds, the attempt's per-query window already
-          // ranked EVERY row (legacy ids ride along unconditionally) —
-          // the remaining underfill is the filter's true answer, and
-          // each further escalation would burn a full B x N signature
-          // window plus rescore to recompute it. Unknown row counts
-          // disable the exit rather than risk a false stop. The bound
-          // sums the PINNED manifest already in hand (the snapshot
-          // every attempt serves) — re-resolving the current snapshot
-          // here could see a concurrent shrink and fire a false exit
-          // against a larger pinned snapshot that escalation would
-          // still fill (r20 review).
-          var tries = 0
-          def underfilled(r: DataFrame): Boolean = {
-            val filled = r.groupBy(col("query_id")).count()
-              .filter(col("count") >= k).count()
-            filled < nQueries // qids verified distinct above
-          }
-          val totalRows =
-            if (all.exists(_.rows.isEmpty)) None
-            else Some(all.flatMap(_.rows).sum)
-          while (tries < maxEscalations && totalRows.forall(sl < _) &&
-              underfilled(res)) {
-            sl *= 2
-            tries += 1
-            lastKnnEscalations = tries
-            res = attempt(sl)
-          }
+        val totalRows =
+          if (all.exists(_.rows.isEmpty)) None
+          else Some(all.flatMap(_.rows).sum)
+        while (tries < maxEscalations && totalRows.forall(sl < _) &&
+            underfilled(res)) {
+          sl *= 2
+          tries += 1
+          lastKnnEscalations = tries
+          res = attempt(sl)
         }
-        res
-      } finally sigs.unpersist(blocking = false)
+      }
+      res
     } finally qs.unpersist(blocking = false)
   }
 
   /** Which path the last [[knnJoin]] took ("exact-empty",
-    * "exact-nosig", "exact-legacy-dominated", "approx"). */
+    * "exact-stats-refuted", "approx"). */
   private[graft] var lastKnnMode: String = ""
 
   /** How many shortlist doublings the last filtered [[knnJoin]] ran
@@ -700,11 +621,7 @@ final class VectorIndex private (
     * Approximation contract, same shape as [[queryApprox]]:
     * `shortlist >= index size` provably recovers [[query]] (every row
     * joins the exact rescore); smaller shortlists trade recall for
-    * the narrow prefix read + bounded rescore. Defensive legacy
-    * tolerance mirrors `_bsig`: rows whose file predates `_vpre`
-    * surface null and ALWAYS join the rescore; an index with no
-    * prefix column at all degrades to the exact [[query]]. `filter`
-    * applies at rescore (the correctness authority); `asOf` serves an
+    * the narrow prefix read + bounded rescore. `filter` applies at rescore (the correctness authority); `asOf` serves an
     * older retained snapshot. An index not created with a prefix
     * layout refuses loudly — the slice stored is the MRL coarse
     * embedding, and pretending a prefix of an untrained layout ranks
@@ -751,73 +668,40 @@ final class VectorIndex private (
         Some(v)
       case None => currentSnapshot(spark, path)
     }
-    snap match {
-      case None =>
-        lastMatryoshkaMode = "exact-empty"
-        query(q, k, filter, asOf)
-      case Some(n) =>
-        val manifest = readManifest(spark, path, n)
-        val files = manifest.values.flatten.toSeq.map(_.file).sorted
-        matryoshkaPhases(files, q, shortlist, Some(n)) match {
-          case None =>
-            lastMatryoshkaMode =
-              if (files.isEmpty) "exact-empty" else "exact-nopre"
-            query(q, k, filter, asOf)
-          case Some(phase) =>
-            lastMatryoshkaMode = "matryoshka"
-            try {
-              val candIds = phase.ranked.unionByName(phase.legacy)
-                .distinct()
-                .localCheckpoint(true) // bucket-key collect + rescore join
-              val nb = currentNumBuckets(Some(n))
-              val buckets = candIds
-                .select(pmod(xxhash64(col("id")), lit(nb)).cast("int").as("_b"))
-                .distinct().collect().map(_.getInt(0)).toSet
-              val bFiles = manifest.collect { case (b, fs) if buckets(b) => fs }
-                .flatten.map(_.file).toSeq.sorted
-              val rows =
-                if (bFiles.isEmpty) emptyIndexDf(spark)
-                else readSnapshotFiles(spark, path, n, bFiles, mergeSchema = false)
-                  .select(col("id"), col("values"), col("metadata"))
-              val rescored = rows.join(broadcast(candIds), "id")
-              filter.foldLeft(rescored)((df, f) => df.filter(f))
-                .withColumn("score", scoreCol(q))
-                .orderBy(col("score").desc, col("id"))
-                .limit(k)
-                .select(col("id"), col("score"), col("metadata"))
-            } finally phase.sigs.unpersist(blocking = false)
-        }
+    val files = snap.map(readManifest(spark, path, _)).getOrElse(Map.empty)
+      .values.flatten.toSeq.map(_.file).sorted
+    if (files.isEmpty) {
+      lastMatryoshkaMode = "exact-empty"
+      return query(q, k, filter, asOf)
     }
+    lastMatryoshkaMode = "matryoshka"
+    // pinned: feeds the bucket-key collect + rescore join
+    val candIds = matryoshkaPhases(files, q, shortlist, snap)
+      .localCheckpoint(true)
+    topScored(rescore(snap.get, candIds, q, filter), k)
   }
 
-  /** [[queryMatryoshka]]'s shortlist phase over a file list: prefix-
-    * cosine-ranked shortlist ids, null-prefix legacy ids, and the
-    * persisted narrow (id,_vpre) projection both read from (caller
-    * unpersists) — the [[approxPhases]] shape with the prefix column
-    * in the signature role. None when the files are empty or store no
-    * `_vpre` at all. `private[graft]` so specs can assert the phase's
-    * physical plan (TakeOrderedAndProject + a scan pruned to
-    * (id,_vpre) — the full vectors never read in phase 1). */
+  /** [[queryMatryoshka]]'s shortlist phase over a non-empty file list:
+    * the prefix-cosine-ranked shortlist ids — the [[approxPhases]]
+    * shape with the prefix column in the signature role.
+    * `private[graft]` so specs can assert the phase's physical plan
+    * (TakeOrderedAndProject + a scan pruned to (id,_vpre) — the full
+    * vectors never read in phase 1). */
   private[graft] def matryoshkaPhases(files: Seq[String], q: Array[Float],
-      shortlist: Int, ver: Option[Long] = None): Option[SigPhase] = {
-    if (files.isEmpty) return None
-    // mergeSchema: a file may predate the _vpre column. `ver` routes
-    // through the snapshot schema cache (see approxPhases).
+      shortlist: Int, ver: Option[Long] = None): DataFrame = {
+    require(files.nonEmpty, "matryoshkaPhases needs at least one file")
+    // `ver` routes through the snapshot schema cache (see approxPhases)
     val raw = ver match {
       case Some(n) => readSnapshotFiles(spark, path, n, files, mergeSchema = true)
       case None => spark.read.option("mergeSchema", "true")
         .parquet(files.map(f => s"$path/$f"): _*)
     }
-    if (!raw.columns.contains("_vpre")) return None
     val qPre = lit(q.take(meta.prefixDim).map(_.toDouble))
-    val pre = raw.select(col("id"), col("_vpre"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val ranked = pre.filter(col("_vpre").isNotNull)
+    raw.select(col("id"), col("_vpre"))
       .withColumn("_ps", vectors.cosine(col("_vpre"), qPre))
       .orderBy(col("_ps").desc, col("id"))
       .limit(shortlist)
       .select(col("id"))
-    Some(SigPhase(ranked, pre.filter(col("_vpre").isNull).select(col("id")), pre))
   }
 
   /** How many shortlist doublings the last filtered [[queryMatryoshka]]
@@ -825,7 +709,7 @@ final class VectorIndex private (
   private[graft] var lastMatryoshkaEscalations: Int = 0
 
   /** Which path the last [[queryMatryoshka]] took ("exact-empty",
-    * "exact-nopre", "matryoshka") — spec/operator diagnostics. */
+    * "matryoshka") — spec/operator diagnostics. */
   private[graft] var lastMatryoshkaMode: String = ""
 
   /** Total recorded rows of the snapshot `asOf` serves (the current
@@ -850,16 +734,16 @@ final class VectorIndex private (
     * (radius-bounded by `hdBound` when given — see the `maxRing`
     * soundness note on [[VectorIndex.selectProbeFiles]]),
     * Hamming-ranked candidates WITH their distances (the global pool
-    * needs them), legacy ids, or the shard's exact/empty fallback.
+    * needs them), or empty when the shard provably holds no candidate.
     * `fileTarget` overrides the probed-row coverage target (default
     * `shortlist * ProbeOversample`) — the two-phase parallel gather's
     * PRELIMINARY pass covers only its per-shard share of the global
-    * shortlist; ranking and fallback thresholds stay on `shortlist`
-    * either way. `pinSnap` serves a SPECIFIC retained snapshot instead
-    * of the current one — the parallel gather pins phase 2 to phase
-    * 1's snapshot, so one query never mixes two versions of the same
-    * shard when a writer commits between the phases (r20 review). */
-  private[graft] def shardSigPhase(q: Array[Float], k: Int, shortlist: Int,
+    * shortlist; ranking stays on `shortlist` either way. `pinSnap`
+    * serves a SPECIFIC retained snapshot instead of the current one —
+    * the parallel gather pins phase 2 to phase 1's snapshot, so one
+    * query never mixes two versions of the same shard when a writer
+    * commits between the phases (r20 review). */
+  private[graft] def shardSigPhase(q: Array[Float], shortlist: Int,
       filter: Option[Column], hdBound: Option[Int],
       fileTarget: Option[Long] = None,
       pinSnap: Option[Long] = None): ShardPhase =
@@ -871,50 +755,29 @@ final class VectorIndex private (
         val preds = filter.map(extractStatPreds).getOrElse(Nil)
         val usable = if (preds.isEmpty) all else all.filter(fileCanMatch(_, preds))
         // all files stats-refuted: provably no matching row in the shard
-        if (all.isEmpty || usable.isEmpty) return ShardEmpty
+        if (usable.isEmpty) return ShardEmpty
         val bits = manifestMeta(spark, path, n).map(_.sigCellBits)
           .getOrElse(meta.sigCellBits)
         val qsig = Ann.bitSignature64(q.map(_.toDouble), SigSeed)
         val files = selectProbeFiles(usable, bits, qsig,
           fileTarget.getOrElse(shortlist.toLong * ProbeOversample), hdBound)
         if (files.isEmpty) return ShardEmpty
-        val raw0 = readSnapshotFiles(spark, path, n, files, mergeSchema = true)
-        if (!raw0.columns.contains("_bsig"))
-          return ShardExact(query(q, k, filter, asOf = pinSnap)
-            .localCheckpoint(true))
         val pushable = filter.filter(f =>
           filterRoots(f).exists(_.subsetOf(Set("id", "metadata"))))
-        val raw = pushable.foldLeft(raw0)((df, f) => df.filter(f))
-        val sigs = raw.select(col("id"), col("_bsig"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // legacy-dominated shard: the approximation saves nothing
-          // over its exact scan (the ADVICE r12 argument, per shard)
-          if (sigs.filter(col("_bsig").isNull).limit(shortlist).count()
-              >= shortlist)
-            return ShardExact(query(q, k, filter, asOf = pinSnap)
-            .localCheckpoint(true))
-          val rankedAll = sigs.filter(col("_bsig").isNotNull)
-            .withColumn("_hd",
-              bit_count(col("_bsig").bitwiseXOR(lit(qsig))).cast("int"))
-          // the global bound also cuts candidate VOLUME inside the
-          // probed files (sound: a cut row can never re-enter the pool)
-          val bounded = hdBound.foldLeft(rankedAll)(
-            (df, b) => df.filter(col("_hd") <= b))
-          val ranked = bounded.orderBy(col("_hd"), col("id"))
-            .limit(shortlist).select(col("id"), col("_hd"))
-            .localCheckpoint(true)
-          val legacy = sigs.filter(col("_bsig").isNull).select(col("id"))
-            .localCheckpoint(true)
-          ShardCands(n, ranked, legacy, files.size, all.size, files)
-        } finally sigs.unpersist(blocking = false)
+        val ranked = approxPhases(files, q, shortlist, pushable, Some(n), hdBound)
+          .localCheckpoint(true)
+        ShardCands(n, ranked, files, all.size)
     }
 
-  /** One shard's exact RESCORE of an id set for the scatter-gather:
-    * reads full rows only from the manifest files of the buckets the
-    * ids hash into (stats-refuted files skipped), applies the caller's
-    * filter, returns scored rows (no top-k — the gather merges). */
-  private[graft] def shardRescore(snap: Long, candIds: DataFrame,
+  /** Exact RESCORE of an id set against snapshot `snap`: reads full
+    * rows only from the manifest files of the buckets the ids hash into
+    * (stats-refuted files skipped), applies the caller's filter, and
+    * returns scored (id, score, metadata) rows with no top-k — the
+    * single-index probes take theirs with [[topScored]], the
+    * scatter-gather merges shards first. `candIds` is read twice (the
+    * bucket-key collect and the broadcast join), so callers pass a
+    * pinned or cheap plan. */
+  private[graft] def rescore(snap: Long, candIds: DataFrame,
       q: Array[Float], filter: Option[Column]): DataFrame = {
     val manifest = readManifest(spark, path, snap)
     val preds = filter.map(extractStatPreds).getOrElse(Nil)
@@ -935,94 +798,39 @@ final class VectorIndex private (
       .select(col("id"), col("score"), col("metadata"))
   }
 
-  /** [[queryApprox]]'s signature phase over a probe file list: the
-    * ranked shortlist ids, the legacy null-signature ids, and the
-    * PERSISTED narrow (id,_bsig) projection both are computed from —
-    * one scan of the probed files feeds shortlist ranking, legacy
-    * census and the candidate union (the caller unpersists). None when
-    * the files are empty or store no signature column at all.
-    * `private[graft]` so plan-shape specs can assert the phase's
-    * physical plan (TakeOrderedAndProject + (id, _bsig)-pruned scan) —
-    * invisible from queryApprox's result, whose checkpoint has already
-    * executed it. */
+  /** [[queryApprox]]'s signature phase over a non-empty probe file
+    * list: the shortlist's (id, _hd) rows ranked by Hamming distance
+    * `_hd` to the query's signature, from one scan pruned to (id, _bsig).
+    * `hdBound` drops rows beyond that distance before ranking (the
+    * scatter-gather's global bound: sound, since a cut row could never
+    * enter the pool). `private[graft]` so
+    * plan-shape specs can assert the phase's physical plan
+    * (TakeOrderedAndProject + (id, _bsig)-pruned scan) — invisible from
+    * queryApprox's result, whose checkpoint has already executed it. */
   private[graft] def approxPhases(files: Seq[String], q: Array[Float],
       shortlist: Int, preFilter: Option[Column] = None,
-      ver: Option[Long] = None): Option[SigPhase] = {
-    if (files.isEmpty) return None
-    // mergeSchema: the sampled file may predate the _bsig column.
+      ver: Option[Long] = None, hdBound: Option[Int] = None): DataFrame = {
+    require(files.nonEmpty, "approxPhases needs at least one file")
     // `ver` routes the read through the snapshot schema cache; None
     // (diagnostic callers) keeps the uncached inference.
-    val raw0 = ver match {
+    val raw = ver match {
       case Some(n) => readSnapshotFiles(spark, path, n, files, mergeSchema = true)
       case None => spark.read.option("mergeSchema", "true")
         .parquet(files.map(f => s"$path/$f"): _*)
     }
-    if (!raw0.columns.contains("_bsig")) return None
     // metadata/id-only filter evaluated BEFORE the (id,_bsig) project:
     // the shortlist then contains matching rows only (parquet row-group
     // stats additionally skip within surviving files). The full filter
     // still re-applies at rescore — pushing is a pruning step, never
     // the correctness gate.
-    val raw = preFilter.foldLeft(raw0)((df, f) => df.filter(f))
-    val sigs = raw.select(col("id"), col("_bsig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val qsig = Ann.bitSignature64(q.map(_.toDouble), SigSeed)
-    val ranked = sigs
-      .filter(col("_bsig").isNotNull)
+    val scored = preFilter.foldLeft(raw)((df, f) => df.filter(f))
+      .select(col("id"), col("_bsig"))
       .withColumn("_hd", bit_count(col("_bsig").bitwiseXOR(lit(qsig))).cast("int"))
+    hdBound.foldLeft(scored)((df, b) => df.filter(col("_hd") <= b))
       .orderBy(col("_hd"), col("id"))
       .limit(shortlist)
-      .select(col("id"))
-    Some(SigPhase(ranked, sigs.filter(col("_bsig").isNull).select(col("id")), sigs))
-  }
-
-  /** Rows [[queryApprox]] must always exact-rescore because their file
-    * predates the `_bsig` column (or stores a null signature) — the
-    * operator-facing gauge for "how much of this index still needs
-    * [[backfillSignatures]]". Column-pruned maintenance scan (8 B/row),
-    * not a serving-path cost. */
-  def legacyRows(): Long = currentSnapshot(spark, path) match {
-    case None => 0L
-    case Some(n) =>
-      val files = readManifest(spark, path, n).values.flatten.map(_.file).toSeq.sorted
-      if (files.isEmpty) 0L
-      else {
-        val df = readSnapshotFiles(spark, path, n, files, mergeSchema = true)
-        if (!df.columns.contains("_bsig")) df.count()
-        else df.filter(col("_bsig").isNull).count()
-      }
-  }
-
-  /** Targeted `_bsig` backfill: rewrite ONLY the buckets that still
-    * contain legacy (null-signature) rows; every other bucket's files
-    * are carried forward by reference, so the write cost tracks the
-    * legacy fraction, not the index. Returns the number of buckets
-    * rewritten (0 = nothing to do, no snapshot committed). A rebucket
-    * remains the natural FULL backfill. */
-  def backfillSignatures(): Int = currentSnapshot(spark, path) match {
-    case None => 0
-    case Some(n) =>
-      val manifest = readManifest(spark, path, n)
-      val files = manifest.values.flatten.map(_.file).toSeq.sorted
-      if (files.isEmpty) return 0
-      val probe = readSnapshotFiles(spark, path, n, files, mergeSchema = true)
-      val legacyFiles: Set[String] =
-        if (!probe.columns.contains("_bsig")) files.toSet
-        else probe.select(input_file_name().as("f"), col("_bsig"))
-          .filter(col("_bsig").isNull)
-          .select("f").distinct()
-          .collect().map(_.getString(0)).toSet // bounded by the file count
-      if (legacyFiles.isEmpty) return 0
-      val touched = manifest.collect {
-        case (b, fs0) if fs0.exists(mf => legacyFiles.exists(_.endsWith(mf.file))) => b
-      }.toSet
-      val nb = currentNumBuckets(Some(n))
-      val oldFiles = touched.toSeq.sorted.flatMap(manifest.getOrElse(_, Nil)).map(_.file)
-      val rows = readSnapshotFiles(spark, path, n, oldFiles, mergeSchema = false)
-        .select(col("id"), col("values"), col("metadata"), col("version"))
-        .withColumn("_bucket", bucketOf(col("id"), nb))
-      writeSnapshot(n + 1, rows, manifest, touched, nb)
-      touched.size
+      .select(col("id"), col("_hd"))
   }
 
   /** Q4 fetch by id; `asOf` reads an older retained snapshot (same
@@ -1129,8 +937,7 @@ final class VectorIndex private (
     val dataDir = s"data/v=$version-$attempt"
     // every rewritten row also stores its 64-bit hyperplane signature
     // (8 bytes/row) — what [[queryApprox]]'s shortlist pass reads
-    // instead of the vectors; legacy files without the column stay
-    // valid (their rows surface null and are always exact-rescored)
+    // instead of the vectors
     val withSig0 = Ann.encodeBinary(merged, "values", SigSeed)
     // Matryoshka layout (meta.prefixDim > 0): the vector's first
     // prefixDim components stored as their own narrow column, so
@@ -1147,8 +954,9 @@ final class VectorIndex private (
     // queryApprox's shortlist pass then reads only the files of the
     // query cell's Hamming neighborhood instead of every (id,_bsig)
     // pair in the index. shiftrightunsigned keeps the top bits as a
-    // small non-negative dir name; a null signature (no layout cell)
-    // lands in the hive default partition, which probes always read.
+    // small non-negative dir name; a cell below `cellMinRows` (null
+    // `_cell`, see below) lands in the hive default partition, which
+    // probes always read.
     // Cluster by bucket FIRST so each bucket lands in few files (the
     // window's id-hash layout would otherwise scatter every bucket
     // across tasks).
@@ -1634,17 +1442,15 @@ object VectorIndex {
 
   /** A shard's contribution to the scatter-gather signature phase. */
   private[graft] sealed trait ShardPhase
-  /** No snapshot, or every file stats-refuted: contributes nothing. */
+  /** No snapshot, every file stats-refuted, or every cell ring beyond
+    * the bound: contributes nothing. */
   private[graft] case object ShardEmpty extends ShardPhase
-  /** No signatures / legacy-dominated: the shard's own exact top-k
-    * (sufficient for the global top-k — distributed-IR merge). */
-  private[graft] final case class ShardExact(rows: DataFrame) extends ShardPhase
-  /** Hamming-ranked candidates (id,_hd) + legacy ids + probe census
-    * (`files` = the probed manifest paths, so the two-phase gather can
-    * account DISTINCT files across its phases). */
+  /** Hamming-ranked candidates (id,_hd) of snapshot `snap` + probe
+    * census (`files` = the probed manifest paths, so the two-phase
+    * gather can account DISTINCT files across its phases, out of the
+    * shard's `totalFiles`). */
   private[graft] final case class ShardCands(snap: Long, ranked: DataFrame,
-      legacy: DataFrame, probedFiles: Int, totalFiles: Int,
-      files: Seq[String]) extends ShardPhase
+      files: Seq[String], totalFiles: Int) extends ShardPhase
 
   /** Scatter-gather over the APPROX serving path (r18; TIGHTENED r19,
     * verdict item #6): at the 10^12-vector regime sharding exists
@@ -1654,8 +1460,8 @@ object VectorIndex {
     *
     * CONTRACT (r19): the candidate set is the union's globally
     * top-`shortlist` signature candidates by (Hamming, id) — what ONE
-    * merged index's [[queryApprox]] shortlist would rank — plus every
-    * legacy row; one exact rescore per owning shard; k-row merge.
+    * merged index's [[queryApprox]] shortlist would rank; one exact
+    * rescore per owning shard; k-row merge.
     * `shortlist` >= the union's size makes the pool exhaustive and
     * the answer provably the exact global top-k (the q221 recovery).
     *
@@ -1699,9 +1505,7 @@ object VectorIndex {
     * form — the reference implementation the parallel path is
     * spec-compared against, and a debugging fallback.
     *
-    * Per-shard fallbacks keep their r18 semantics: a no-signature or
-    * legacy-dominated shard contributes its exact top-k; a
-    * stats-refuted shard contributes nothing. A filtered gather that
+    * A stats-refuted shard contributes nothing. A filtered gather that
     * underfills k ESCALATES globally (shortlist doubles, bound
     * recomputed), up to `maxEscalations`. */
   def queryManyApprox(idxs: Seq[VectorIndex], q: Array[Float], k: Int,
@@ -1709,25 +1513,19 @@ object VectorIndex {
       maxEscalations: Int = 3, sequential: Boolean = false): DataFrame = {
     require(idxs.nonEmpty, "queryManyApprox needs at least one index")
     // shared gather tail: global pool -> per-shard rescore -> k-merge
-    def gather(exactParts: Seq[DataFrame],
-        candShards: Seq[(VectorIndex, Long, DataFrame, DataFrame)],
-        sl: Int): DataFrame = {
-      val pool = candShards.map(_._3).reduceOption(_.unionByName(_))
+    def gather(candShards: Seq[(VectorIndex, ShardCands)], sl: Int): DataFrame = {
+      val pool = candShards.map(_._2.ranked).reduceOption(_.unionByName(_))
       val globalIds = pool.map(_.orderBy(col("_hd"), col("id")).limit(sl)
         .select(col("id")).localCheckpoint(true))
-      val rescoreParts = candShards.map { case (idx, snap, ranked, legacy) =>
-        // this shard rescores its pool members + its legacy rows
+      val rescoreParts = candShards.map { case (idx, c) =>
+        // this shard rescores its members of the global pool
         val mine = globalIds.map(g =>
-            ranked.select(col("id")).join(g, Seq("id"), "left_semi"))
-          .getOrElse(ranked.select(col("id")))
-        idx.shardRescore(snap,
-          mine.unionByName(legacy).distinct().localCheckpoint(true),
-          q, filter)
+            c.ranked.select(col("id")).join(g, Seq("id"), "left_semi"))
+          .getOrElse(c.ranked.select(col("id")))
+        idx.rescore(c.snap, mine, q, filter)
       }
-      val parts = exactParts ++ rescoreParts
-      parts.reduceOption(_.unionByName(_))
-        .map(_.orderBy(col("score").desc, col("id")).limit(k)
-          .select(col("id"), col("score"), col("metadata")))
+      rescoreParts.reduceOption(_.unionByName(_))
+        .map(topScored(_, k))
         .getOrElse(emptyIndexDf(idxs.head.spark)
           .select(col("id"), lit(0.0).as("score"), col("metadata")))
     }
@@ -1738,19 +1536,16 @@ object VectorIndex {
       lastManyBoundedProbes = 0
       var pool: Option[DataFrame] = None // union of (id,_hd) so far
       var bound: Option[Int] = None
-      val exactParts = Seq.newBuilder[DataFrame]
-      val candShards =
-        Seq.newBuilder[(VectorIndex, Long, DataFrame, DataFrame)]
+      val candShards = Seq.newBuilder[(VectorIndex, ShardCands)]
       var anyApprox = false
       idxs.foreach { idx =>
-        idx.shardSigPhase(q, k, sl, filter, bound) match {
+        idx.shardSigPhase(q, sl, filter, bound) match {
           case ShardEmpty => ()
-          case ShardExact(rows) => exactParts += rows
           case c: ShardCands =>
             anyApprox = true
-            lastManyProbeFiles += c.probedFiles
+            lastManyProbeFiles += c.files.size
             if (bound.isDefined) lastManyBoundedProbes += 1
-            candShards += ((idx, c.snap, c.ranked, c.legacy))
+            candShards += ((idx, c))
             pool = Some(pool.map(_.unionByName(c.ranked)).getOrElse(c.ranked))
             val p = pool.get
             if (p.limit(sl).count() >= sl)
@@ -1758,7 +1553,7 @@ object VectorIndex {
                 .agg(max(col("_hd"))).head().getInt(0))
         }
       }
-      (gather(exactParts.result(), candShards.result(), sl), anyApprox)
+      (gather(candShards.result(), sl), anyApprox)
     }
     // r20 two-phase parallel form
     def oncePar(sl: Int): (DataFrame, Boolean) = {
@@ -1776,7 +1571,7 @@ object VectorIndex {
       // independent probes — correct, just unpruned.
       val share = math.max(1L, sl.toLong)
       val phase1 = inParallel(idxs)(idx =>
-        idx.shardSigPhase(q, k, sl, filter, None, Some(share)))
+        idx.shardSigPhase(q, sl, filter, None, Some(share)))
       val pool1 = phase1.collect { case c: ShardCands => c.ranked }
         .reduceOption(_.unionByName(_))
       val bound: Option[Int] = pool1.flatMap { p =>
@@ -1786,39 +1581,33 @@ object VectorIndex {
         else None
       }
       // phase 2: candidate shards re-probe at full coverage UNDER the
-      // bound; exact/empty shards keep their phase-1 verdicts. A shard
-      // whose PRELIMINARY probe already scanned every file it has
-      // skips the re-probe outright — phase 1 was exhaustive, so its
-      // ranked top-sl already IS the shard's contribution (small
-      // shards hit this constantly; re-probing them would make the
-      // two-phase form strictly slower than sequential there).
+      // bound; empty shards keep their phase-1 verdicts. A shard whose
+      // PRELIMINARY probe already scanned every file it has skips the
+      // re-probe outright — phase 1 was exhaustive, so its ranked
+      // top-sl already IS the shard's contribution (small shards hit
+      // this constantly; re-probing them would make the two-phase form
+      // strictly slower than sequential there).
       val phase2 = inParallel(idxs.zip(phase1)) {
-        case (idx, c1: ShardCands) if c1.probedFiles == c1.totalFiles =>
+        case (idx, c1: ShardCands) if c1.files.size == c1.totalFiles =>
           (idx, None, c1: ShardPhase)
         case (idx, c1: ShardCands) =>
           // pin phase 2 to phase 1's snapshot: a writer committing
           // between the phases must not make one query mix two
           // versions of the same shard (r20 review)
-          (idx, Some(c1), idx.shardSigPhase(q, k, sl, filter, bound,
+          (idx, Some(c1), idx.shardSigPhase(q, sl, filter, bound,
             pinSnap = Some(c1.snap)))
         case (idx, other) => (idx, None, other)
       }
-      val exactParts = Seq.newBuilder[DataFrame]
-      val candShards =
-        Seq.newBuilder[(VectorIndex, Long, DataFrame, DataFrame)]
-      var anyApprox = false
+      val candShards = Seq.newBuilder[(VectorIndex, ShardCands)]
       phase2.foreach {
         case (_, None, ShardEmpty) => ()
-        case (_, None, ShardExact(rows)) => exactParts += rows
         case (idx, None, c1: ShardCands) =>
           // exhaustive phase 1 (every file scanned): already the
           // shard's full contribution, no bounded re-probe needed
-          anyApprox = true
-          lastManyProbeFiles += c1.probedFiles
+          lastManyProbeFiles += c1.files.size
           if (bound.isDefined) lastManyBoundedProbes += 1
-          candShards += ((idx, c1.snap, c1.ranked, c1.legacy))
+          candShards += ((idx, c1))
         case (idx, Some(c1), c2: ShardCands) =>
-          anyApprox = true
           lastManyProbeFiles += (c1.files ++ c2.files).distinct.size
           if (bound.isDefined) lastManyBoundedProbes += 1
           // phase 2's files normally cover phase 1's (8x the row
@@ -1827,29 +1616,18 @@ object VectorIndex {
           // jobs per shard; union only on a genuine coverage cut (the
           // bound or target stopped phase 2's ring loop short of a
           // phase-1 ring), where a row already in hand must not drop
-          val ranked =
-            if (c1.files.toSet.subsetOf(c2.files.toSet)) c2.ranked
-            else c2.ranked.unionByName(c1.ranked)
-              .dropDuplicates("id").localCheckpoint(true)
-          val legacy =
-            if (c1.files.toSet.subsetOf(c2.files.toSet)) c2.legacy
-            else c2.legacy.unionByName(c1.legacy).distinct()
-              .localCheckpoint(true)
-          candShards += ((idx, c2.snap, ranked, legacy))
-        case (idx, Some(c1), ShardExact(rows)) =>
-          // phase 2 hit the legacy-dominated fallback: exact wins
-          anyApprox = true
-          lastManyProbeFiles += c1.files.size
-          exactParts += rows
+          candShards += ((idx,
+            if (c1.files.toSet.subsetOf(c2.files.toSet)) c2
+            else c2.copy(ranked = c2.ranked.unionByName(c1.ranked)
+              .dropDuplicates("id").localCheckpoint(true))))
         case (_, Some(c1), ShardEmpty) =>
           // every phase-2 ring exceeded the bound: phase 1's rows all
           // sit beyond it too (row Hamming >= its file's ring), so the
           // shard provably holds nothing the pool could keep
-          anyApprox = true
           lastManyProbeFiles += c1.files.size
           if (bound.isDefined) lastManyBoundedProbes += 1
       }
-      (gather(exactParts.result(), candShards.result(), sl), anyApprox)
+      (gather(candShards.result(), sl), phase1.exists(_.isInstanceOf[ShardCands]))
     }
     def once(sl: Int): (DataFrame, Boolean) =
       if (sequential || idxs.size == 1) onceSeq(sl) else oncePar(sl)
@@ -2095,11 +1873,11 @@ object VectorIndex {
     walk(ColumnShim.simplify(f))
   }
 
-  /** [[VectorIndex.approxPhases]]'s result: shortlist ranking + legacy
-    * census, both over ONE persisted (id,_bsig) scan (`sigs` — the
-    * caller unpersists when the candidate set is materialized). */
-  private[graft] final case class SigPhase(
-      ranked: DataFrame, legacy: DataFrame, sigs: DataFrame)
+  /** The top `k` of scored (id, score, metadata) rows by (score desc,
+    * id) — every probe's final ordering, deterministic under ties. */
+  private[graft] def topScored(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("score").desc, col("id")).limit(k)
+      .select(col("id"), col("score"), col("metadata"))
 
   /** Cell ring expansion stops once the probed files cover this many
     * times the requested shortlist (known row counts only): a 6-bit
@@ -2110,7 +1888,7 @@ object VectorIndex {
   private[graft] val ProbeOversample = 8L
 
   /** Probe-file selection for [[VectorIndex.queryApprox]]: all no-cell
-    * files (legacy layout, null-signature partition, unknown counts)
+    * files (cells below `cellMinRows`, unknown counts)
     * plus the files of the query cell's expanding Hamming rings, until
     * the rings' known row counts reach `target` (or every ring is
     * included — which is how `shortlist >= index` degrades to the

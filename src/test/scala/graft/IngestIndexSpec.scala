@@ -19,6 +19,34 @@ class IngestIndexSpec extends AnyFunSuite {
 
   private val embedder = new HashingEmbedder(dimension = 64, seed = 42L)
 
+  /** Spark jobs `body` submits from this thread (and threads it starts).
+    * A marker job run afterwards flushes the listener: its start event
+    * queues behind every earlier one. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.spec.jobCount"
+    val seen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some("body") => seen.incrementAndGet(): Unit
+          case Some("marker") => flushed.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, "body")
+      try body finally sc.setLocalProperty(key, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(flushed.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    seen.get()
+  }
+
   test("A1/A2/A3: binaryFile scan + extract trait + OCR fallback branch") {
     import graft.sources.{FallbackExtractor, OcrExtractor, Utf8TextExtractor}
     val dir = Files.createTempDirectory("graft_pdfs")
@@ -146,7 +174,7 @@ class IngestIndexSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.index.retainSnapshots")
   }
 
-  test("queryApprox: full shortlist == exact query; pruned shortlist holds recall; legacy files always rescore") {
+  test("queryApprox: full shortlist == exact query; pruned shortlist holds recall; probe and join job counts pinned") {
     val dir = Files.createTempDirectory("graft_idx_approx").toString
     // cellMinRows=1: at 300 rows every cell is tiny, and the default
     // threshold (a small-index file-count valve) would fold them all
@@ -178,17 +206,14 @@ class IngestIndexSpec extends AnyFunSuite {
     // TakeOrderedAndProject (per-partition heaps) and a scan pruned to
     // (id, _bsig) — the vectors must not appear in its ReadSchema
     val sigFiles = idx.manifestAt(idx.snapshots().last).values.flatten.toSeq.sorted
-    val Some(phase) = idx.approxPhases(sigFiles, q, shortlist = 60)
-    try {
-      val rankedPlan = phase.ranked.queryExecution.executedPlan.toString
-      assert(rankedPlan.contains("TakeOrderedAndProject"),
-        s"no top-k heap plan:\n$rankedPlan")
-      val scanPlan = phase.sigs.queryExecution.executedPlan.toString
-      val sigScans = "ReadSchema: struct<[^>]*".r.findAllIn(scanPlan).toSeq
-        .filter(_.contains("_bsig"))
-      assert(sigScans.nonEmpty && sigScans.exists(!_.contains("values")),
-        s"shortlist scan must be pruned to (id,_bsig):\n$scanPlan")
-    } finally phase.sigs.unpersist(blocking = false)
+    val rankedPlan = idx.approxPhases(sigFiles, q, shortlist = 60)
+      .queryExecution.executedPlan.toString
+    assert(rankedPlan.contains("TakeOrderedAndProject"),
+      s"no top-k heap plan:\n$rankedPlan")
+    val sigScans = "ReadSchema: struct<[^>]*".r.findAllIn(rankedPlan).toSeq
+      .filter(_.contains("_bsig"))
+    assert(sigScans.nonEmpty && sigScans.exists(!_.contains("values")),
+      s"shortlist scan must be pruned to (id,_bsig):\n$rankedPlan")
     // CELL PRUNING, mechanically: a small shortlist must make the
     // signature phase read a STRICT SUBSET of the manifest's files
     // (the files of the query cell's Hamming rings plus any no-cell
@@ -208,62 +233,17 @@ class IngestIndexSpec extends AnyFunSuite {
     val filtered = idx.queryApprox(q, 5, shortlist = 300,
       filter = Some($"metadata.chunk_index" === 0))
     assert(filtered.select("metadata.chunk_index").as[Int].collect().forall(_ == 0))
-    // LEGACY file: strip _bsig from one committed file in place (same
-    // path, manifest untouched) — its rows must surface null signatures
-    // and still be exact-rescored, so a top hit inside it cannot be lost
-    val manifest = idx.manifestAt(idx.snapshots().last)
-    val victimRel = manifest.values.flatten.toSeq.sorted.head
-    val victimPath = s"$dir/a/$victimRel"
-    val victimRows = spark.read.parquet(victimPath)
-      .select("id", "values", "metadata", "version").cache()
-    val victimIds = victimRows.select("id").as[String].collect().toSet
-    assert(victimRows.count() > 0)
-    val tmp = Files.createTempDirectory("graft_idx_legacy").toString
-    victimRows.coalesce(1).write.mode("overwrite").parquet(tmp)
-    victimRows.unpersist()
-    val part = Files.list(java.nio.file.Paths.get(tmp)).toArray.map(_.toString)
-      .filter(_.endsWith(".parquet")).head
-    Files.copy(java.nio.file.Paths.get(part), java.nio.file.Paths.get(victimPath),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // drop the local-FS checksum sidecar the overwrite invalidated
-    val victim = java.nio.file.Paths.get(victimPath)
-    Files.deleteIfExists(victim.resolveSibling("." + victim.getFileName + ".crc"))
-    // query FOR a vector stored in the legacy file: even a 1-row
-    // shortlist cannot lose it (legacy rows bypass the signature phase)
-    val legacyTarget = victimIds.head.stripPrefix("a-").toInt
-    val got = idx.queryApprox(vecs(legacyTarget)._2, 1, shortlist = 1)
-      .select("id").as[String].head()
-    assert(got == s"a-$legacyTarget", "legacy-file row must be exact-rescored")
-    // and the full-shortlist equality still holds across mixed schemas
-    val mixedFull = idx.queryApprox(q, 10, shortlist = 1000)
-      .select("id").as[String].collect().toSeq
-    assert(mixedFull == exact)
-    // TARGETED BACKFILL: the legacy gauge sees the stripped file's rows;
-    // backfillSignatures rewrites ONLY the buckets holding them (every
-    // other bucket's files carried forward by reference), after which
-    // the gauge reads zero and queryApprox answers are unchanged
-    val legacyBefore = idx.legacyRows()
-    assert(legacyBefore == victimIds.size.toLong,
-      s"legacy gauge must count the stripped file's rows: $legacyBefore")
-    val preManifest = idx.manifestAt(idx.snapshots().last)
-    val rewritten = idx.backfillSignatures()
-    assert(rewritten >= 1, "backfill must rewrite at least the victim bucket")
-    val postManifest = idx.manifestAt(idx.snapshots().last)
-    val changed = postManifest.collect {
-      case (b, fs) if preManifest.get(b) != Some(fs) => b
-    }.toSet
-    assert(changed.size == rewritten,
-      s"only rewritten buckets may change: $changed vs $rewritten")
-    (postManifest.keySet -- changed).foreach { b =>
-      assert(postManifest(b) == preManifest(b),
-        s"untouched bucket $b must keep its files by reference")
-    }
-    assert(idx.legacyRows() == 0L, "no legacy rows after backfill")
-    assert(idx.backfillSignatures() == 0, "second backfill is a no-op")
-    assert(idx.queryApprox(q, 10, shortlist = 1000)
-      .select("id").as[String].collect().toSeq == exact,
-      "backfill must not change query answers")
-    assert(idx.scan().count() == 300, "backfill must not change contents")
+    // JOB BUDGET: one unfiltered probe and one 4-query batch join, each
+    // counted from the call through its collected result. Job counts are
+    // exact integers on a fixed fixture, so a change that adds a job to
+    // either serving path fails here instead of hiding in latency noise.
+    val qs = Seq(3, 42, 99, 250).map(n => (s"q$n", vecs(n)._2.toSeq))
+      .toDF("qid", "vec")
+    val approxJobs = jobsOf(idx.queryApprox(q, 10, shortlist = 60).collect())
+    val joinJobs = jobsOf(idx.knnJoin(qs, "qid", "vec", k = 10, shortlist = 60)
+      .collect())
+    assert((approxJobs, joinJobs) == ((6, 15)),
+      s"jobs per call: queryApprox $approxJobs, knnJoin $joinJobs")
   }
 
   test("queryMatryoshka: full shortlist == exact; prefix recall holds; phase column-pruned to (id,_vpre); refusal") {
@@ -310,17 +290,14 @@ class IngestIndexSpec extends AnyFunSuite {
     // heap over a scan pruned to (id,_vpre) — the 64-dim vectors never
     // appear in its ReadSchema (the 4x byte cut at 16-of-64)
     val files = idx.manifestAt(idx.snapshots().last).values.flatten.toSeq.sorted
-    val Some(phase) = idx.matryoshkaPhases(files, q, shortlist = 40)
-    try {
-      val rankedPlan = phase.ranked.queryExecution.executedPlan.toString
-      assert(rankedPlan.contains("TakeOrderedAndProject"),
-        s"no top-k heap plan:\n$rankedPlan")
-      val scanPlan = phase.sigs.queryExecution.executedPlan.toString
-      val preScans = "ReadSchema: struct<[^>]*".r.findAllIn(scanPlan).toSeq
-        .filter(_.contains("_vpre"))
-      assert(preScans.nonEmpty && preScans.exists(!_.contains("values")),
-        s"shortlist scan must be pruned to (id,_vpre):\n$scanPlan")
-    } finally phase.sigs.unpersist(blocking = false)
+    val rankedPlan = idx.matryoshkaPhases(files, q, shortlist = 40)
+      .queryExecution.executedPlan.toString
+    assert(rankedPlan.contains("TakeOrderedAndProject"),
+      s"no top-k heap plan:\n$rankedPlan")
+    val preScans = "ReadSchema: struct<[^>]*".r.findAllIn(rankedPlan).toSeq
+      .filter(_.contains("_vpre"))
+    assert(preScans.nonEmpty && preScans.exists(!_.contains("values")),
+      s"shortlist scan must be pruned to (id,_vpre):\n$rankedPlan")
     // an index without the stored prefix layout refuses loudly
     val plain = VectorIndex.ensure(spark, s"$dir/p", 64, numBuckets = 8)
     plain.upsert(recs.limit(10))
@@ -1380,6 +1357,14 @@ class IngestIndexSpec extends AnyFunSuite {
     intercept[IngestError] {
       idx.upsert(records.withColumn("values", slice(col("values"), 1, 10)))
     }
+    // a null embedding is rejected by the same pre-write probe: no
+    // snapshot is committed
+    val snapsBefore = idx.snapshots()
+    intercept[IngestError] {
+      idx.upsert(records.withColumn("values",
+        when(col("id") === "doc-5-0", lit(null)).otherwise(col("values"))))
+    }
+    assert(idx.snapshots() == snapsBefore)
   }
 }
 

@@ -121,15 +121,6 @@ class TextAnalyticsSpec extends AnyFunSuite {
     assert(fps("a") != fps("c"))
   }
 
-  test("winnowing: shared run of text yields shared fingerprint hashes") {
-    val core = "spark catalyst optimizer turns logical plans into physical plans efficiently"
-    val w1 = TextAnalytics.winnowImpl("intro text before. " + core, 8, 16).toSet
-    val w2 = TextAnalytics.winnowImpl(core + " totally different tail content", 8, 16).toSet
-    assert(w1.intersect(w2).nonEmpty)
-    val w3 = TextAnalytics.winnowImpl("nothing in common with the others at all", 8, 16).toSet
-    assert(w1.intersect(w3).isEmpty)
-  }
-
   test("gopherVerdict: each rule fires on its crafted fixture, in order") {
     val longWords = ("w " * 60).trim // 60 one-char words -> meanLen 1 < 3
     val fixtures = Seq(
